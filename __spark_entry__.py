@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from timbala_spark import Engine
 from timbala_spark.model import label_get
+from timbala_spark.pipeline.util import pin_scope
 from timbala_spark.sources.events import (
     USER_BUCKETS,
     event_time_ms_expr,
@@ -648,6 +649,7 @@ def q_dedup_pipeline(spark, sf_dir):
     return near_dup_pipeline(docs, threshold=0.5, n=7).orderBy("doc_id")
 
 
+@pin_scope()  # the incr cache build and the full operator share pins
 def q_dedup_ngram_jaccard(spark, sf_dir):
     """Tagged union (50-entry cap): the SAME exact-Jaccard pair set
     from both execution models of the near-dup operator.
@@ -666,11 +668,6 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     from timbala_spark.pipeline import ngram_jaccard_pairs
 
     docs = _tbl(spark, sf_dir, "documents")
-
-    # build the incr cache FIRST: the probes inside open their own
-    # tracked-pin scope, which would evict the full branch's pins if
-    # the full operator ran first (the fan-out re-execution class of
-    # PERF §20c take 8 — caught in the r9 self-review)
     key = ("ngram_incr", sf_dir)
     if key not in _CACHE:
         import atexit
@@ -856,6 +853,7 @@ def q_embeddings_stats(spark, sf_dir):
     )
 
 
+@pin_scope()  # the incr cache build and the full operator share pins
 def q_dedup_embedding(spark, sf_dir):
     """HEADLINE embedding dedup — tagged union (50-entry cap): the
     SAME pair set from both execution models of the 100 TB production
@@ -882,11 +880,6 @@ def q_dedup_embedding(spark, sf_dir):
 
     emb = _tbl(spark, sf_dir, "embeddings")
     surv = emb.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"))
-
-    # build the incr cache FIRST: the probes inside open their own
-    # tracked-pin scope, which would evict the full branch's pins if
-    # the full operator ran first (same ordering rule as
-    # q_dedup_ngram_jaccard)
     key = ("emb_incr", sf_dir)
     if key not in _CACHE:
         import atexit
@@ -1016,6 +1009,7 @@ def q_dedup_embedding_lsh(spark, sf_dir):
     return out.select("id_a", "id_b", F.round("cos", 6).alias("cos"))
 
 
+@pin_scope()  # the union reads both calls' pins
 def q_dedup_embedding_blocked(spark, sf_dir):
     """Tagged union (50-entry cap): two routes that must both equal
     the all-pairs baseline.

@@ -18,6 +18,77 @@ def embeddings(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
 
 
+def _shingle_texts(n_random: int) -> list:
+    """Edge texts (NULL, empty, blank, short, repeated) plus
+    ``n_random`` seeded random word strings."""
+    import random
+    import string
+
+    rng = random.Random(11)
+    return [
+        None,
+        "",
+        "   ",
+        "one",
+        " lead trail  ",
+        "a b c d e",
+        "a b c d e f g",
+        "a a a a a a a a",
+        *(
+            " ".join(
+                "".join(
+                    rng.choice(string.ascii_lowercase)
+                    for _ in range(rng.randint(1, 8))
+                )
+                for _ in range(rng.randint(0, 60))
+            )
+            for _ in range(n_random)
+        ),
+    ]
+
+
+def _assert_shingle_arms_match(spark, texts, ns) -> None:
+    """Both ``sliding_join_expr`` arms of word_shingles_expr /
+    ngrams_expr equal the old ``transform(sequence, slice)`` form."""
+    from timbala_spark.pipeline.dedup import word_shingles_expr
+    from timbala_spark.pipeline.text import ngrams_expr, tokens_expr
+
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+
+    def ref(text, n, lowercase, distinct):
+        toks = tokens_expr(F.lower(text) if lowercase else text)
+        cnt = F.size(toks) - F.lit(n - 1)
+        grams = F.transform(
+            F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        )
+        if distinct:
+            grams = F.array_distinct(grams)
+        return F.when(cnt < 1, F.array().cast("array<string>")).otherwise(
+            grams
+        )
+
+    for n in ns:
+        for small in (False, True):
+            cases = [
+                (
+                    word_shingles_expr(F.col("text"), n, small=small),
+                    ref(F.col("text"), n, False, True),
+                ),
+                (
+                    ngrams_expr(F.col("text"), n, small=small),
+                    ref(F.col("text"), n, True, False),
+                ),
+            ]
+            for got_expr, ref_expr in cases:
+                bad = df.select(
+                    "doc_id", got_expr.alias("_got"), ref_expr.alias("_ref")
+                ).filter("NOT (_got <=> _ref)")
+                assert bad.count() == 0, (n, small)
+
+
 class TestTextOps:
     def test_token_count(self, spark, documents):
         from timbala_spark.pipeline import with_token_count
@@ -86,7 +157,7 @@ class TestTextOps:
         values)."""
         import random
 
-        from timbala_spark.pipeline import with_fingerprint
+        from timbala_spark.pipeline import util, with_fingerprint
 
         rng = random.Random(7)
         rows = [
@@ -99,9 +170,9 @@ class TestTextOps:
         ).write.parquet(p)
         df = spark.read.parquet(p)
 
-        monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", str(1 << 60))
+        monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", 1 << 60)
         small = with_fingerprint(df).select("doc_id", "fingerprint").collect()
-        monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", "0")
+        monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", 0)
         big = with_fingerprint(df).select("doc_id", "fingerprint").collect()
         assert sorted(map(tuple, small)) == sorted(map(tuple, big))
         assert len({r["fingerprint"] for r in small if r["fingerprint"]}) > 1
@@ -275,67 +346,11 @@ class TestTextOps:
         Values must be bit-identical — including the legacy NULL-text
         output (a single-NULL array) and short/empty/whitespace
         texts."""
-        import random
-        import string
+        _assert_shingle_arms_match(spark, _shingle_texts(150), (2, 5, 13))
 
-        from timbala_spark.pipeline.dedup import word_shingles_expr
-        from timbala_spark.pipeline.text import ngrams_expr, tokens_expr
-
-        rng = random.Random(11)
-        texts = [
-            None,
-            "",
-            "   ",
-            "one",
-            " lead trail  ",
-            "a b c d e",
-            "a b c d e f g",
-            "a a a a a a a a",
-            *(
-                " ".join(
-                    "".join(
-                        rng.choice(string.ascii_lowercase)
-                        for _ in range(rng.randint(1, 8))
-                    )
-                    for _ in range(rng.randint(0, 60))
-                )
-                for _ in range(150)
-            ),
-        ]
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-
-        def ref(text, n, lowercase, distinct):
-            toks = tokens_expr(F.lower(text) if lowercase else text)
-            cnt = F.size(toks) - F.lit(n - 1)
-            grams = F.transform(
-                F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
-            if distinct:
-                grams = F.array_distinct(grams)
-            return F.when(cnt < 1, F.array().cast("array<string>")).otherwise(
-                grams
-            )
-
-        for n in (2, 5, 13):
-            for small in (False, True):
-                cases = [
-                    (
-                        word_shingles_expr(F.col("text"), n, small=small),
-                        ref(F.col("text"), n, False, True),
-                    ),
-                    (
-                        ngrams_expr(F.col("text"), n, small=small),
-                        ref(F.col("text"), n, True, False),
-                    ),
-                ]
-                for got_expr, ref_expr in cases:
-                    bad = df.select(
-                        "doc_id", got_expr.alias("_got"), ref_expr.alias("_ref")
-                    ).filter("NOT (_got <=> _ref)")
-                    assert bad.count() == 0, (n, small)
+    def test_sliding_join_matches_transform_small_case(self, spark):
+        """Default-tier sibling of the test above: 20 texts, n ∈ {2, 5}."""
+        _assert_shingle_arms_match(spark, _shingle_texts(12), (2, 5))
 
     def test_decontamination_known_overlap(self, spark):
         from timbala_spark.pipeline import flag_contaminated
@@ -540,23 +555,48 @@ class TestDedup:
         (codegen aggregation) signature arms of minhash_lsh_pairs must
         return the identical pair set.  Parquet-backed input so the
         metadata gate can actually read a size."""
-        from timbala_spark.pipeline import minhash_lsh_pairs
+        from timbala_spark.pipeline import minhash_lsh_pairs, util
 
         p = str(tmp_path / "docs")
         documents.limit(60).union(
             documents.limit(6).withColumn("doc_id", F.col("doc_id") + 1000)
         ).write.parquet(p)
         docs = spark.read.parquet(p)
-        monkeypatch.setenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES", str(1 << 40))
+        monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", 1 << 40)
         small_arm = sorted(
             map(tuple, minhash_lsh_pairs(docs, threshold=0.5).collect())
         )
-        monkeypatch.setenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES", "0")
+        monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", 0)
         big_arm = sorted(
             map(tuple, minhash_lsh_pairs(docs, threshold=0.5).collect())
         )
         assert small_arm == big_arm
         assert {(0, 1000), (1, 1001)} <= {(a, b) for a, b, _ in small_arm}
+
+    def test_minhash_arms_identical_small_case(self, spark, tmp_path, monkeypatch):
+        """Default-tier sibling of the test above: 20 rows, n ∈ {2, 5}."""
+        import random
+
+        from timbala_spark.pipeline import minhash_lsh_pairs, util
+
+        rng = random.Random(4)
+        rows = [(90, ""), (91, "one")]
+        for i in range(6):
+            words = [f"w{rng.randrange(60)}" for _ in range(14)]
+            rows += [(i, " ".join(words)), (100 + i, " ".join(words))]
+            words[rng.randrange(14)] = "changed"
+            rows.append((200 + i, " ".join(words)))
+        p = str(tmp_path / "docs")
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(p)
+        docs = spark.read.parquet(p)
+        for n in (2, 5):
+            arms = []
+            for cut in (1 << 40, 0):
+                monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", cut)
+                arms.append(sorted(map(tuple, minhash_lsh_pairs(
+                    docs, n=n, threshold=0.5).collect())))
+            assert arms[0] == arms[1], n
+            assert {(i, 100 + i) for i in range(6)} <= {(a, b) for a, b, _ in arms[0]}
 
     def test_simhash_votes_fast_path_matches_join_path(self, spark, documents):
         """r12: on token-filtered input, the assume_tokenized fast path
@@ -643,9 +683,9 @@ class TestSimilarity:
         """r12 (VERDICT r11 #1): cosine_topk/lsh_cosine_topk's unrolled
         kernel arm is gated on the shared small-corpus cut; both arms
         must return identical rows.  Parquet-backed input so the
-        metadata gate can read a size; the generic env knob (r12
-        rename) drives the gate."""
-        from timbala_spark.pipeline import cosine_topk, lsh_cosine_topk
+        metadata gate can read a size; the gate's cut is set
+        directly."""
+        from timbala_spark.pipeline import cosine_topk, lsh_cosine_topk, util
 
         p = str(tmp_path / "embs")
         embeddings.limit(40).write.parquet(p)
@@ -654,9 +694,9 @@ class TestSimilarity:
         c = embs.filter(F.col("vec_id") >= 3)
 
         def run_both(fn, **kw):
-            monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", str(1 << 40))
+            monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", 1 << 40)
             fold = sorted(map(tuple, fn(c, q, k=4, **kw).collect()))
-            monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", "0")
+            monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", 0)
             kernel = sorted(map(tuple, fn(c, q, k=4, **kw).collect()))
             return fold, kernel
 
@@ -1422,18 +1462,19 @@ class TestNgramSmallCorpusGate:
     eager intermediate checkpoint; results must be identical."""
 
     def test_estimated_input_bytes(self, spark, tmp_path):
-        from timbala_spark.pipeline.dedup import _estimated_input_bytes
+        from timbala_spark.pipeline.util import estimated_input_bytes
 
         p = str(tmp_path / "sz")
         spark.range(1000).write.parquet(p)
         df = spark.read.parquet(p)
-        est = _estimated_input_bytes(df)
+        est = estimated_input_bytes(df)
         assert est is not None and 100 < est < 10 << 20
         # in-memory frame: unknown -> None (assume big, fail closed)
         mem = spark.createDataFrame([(1,)], "x long")
-        assert _estimated_input_bytes(mem) is None
+        assert estimated_input_bytes(mem) is None
 
     def test_small_and_big_paths_identical(self, spark, monkeypatch):
+        from timbala_spark.pipeline import util
         from timbala_spark.pipeline.dedup import ngram_jaccard_pairs
 
         texts = [
@@ -1452,12 +1493,13 @@ class TestNgramSmallCorpusGate:
                 ).collect()
             )
 
-        monkeypatch.setenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES", "0")
+        cut = util.SMALL_CORPUS_INPUT_BYTES
+        monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", 0)
         big = run()
         # force the small path even for the in-memory frame (est=None
         # would fail closed): a huge cutoff alone does not flip it, so
         # go through a tiny parquet roundtrip instead
-        monkeypatch.delenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES")
+        monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", cut)
         import tempfile
 
         with tempfile.TemporaryDirectory() as d:

@@ -117,14 +117,16 @@ def test_pack_greedy_small_corpus_gate_is_value_identical(spark, docs, tmp_path,
     """The r11 single-bucket small-corpus gate (no quantile action, no
     subtotal collect) must produce exactly the two-phase machinery's
     output.  A parquet-backed frame makes the metadata gate readable;
-    env=0 disables it for the reference arm."""
+    a cut of 0 disables it for the reference arm."""
+    from timbala_spark.pipeline import util
+
     p = str(tmp_path / "docs.parquet")
     docs.withColumn(
         "n_tokens", F.size(F.split("text", r"\s+")) - 1
     ).write.parquet(p)
     toks = spark.read.parquet(p)
     small = pack_greedy(toks, 100, "n_tokens", "doc_id", n_partitions=7)
-    monkeypatch.setenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES", "0")
+    monkeypatch.setattr(util, "SMALL_CORPUS_INPUT_BYTES", 0)
     big = pack_greedy(toks, 100, "n_tokens", "doc_id", n_partitions=7)
     cols = ["doc_id", "shard_id", "token_offset"]
     assert sorted(map(tuple, small.select(*cols).collect())) == sorted(

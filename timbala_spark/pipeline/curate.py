@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .dedup import connected_components, ngram_jaccard_pairs
+from .util import pin_scope, release_scope, tracked_persist
 
 #: Bounded-collect union-find opt-in for the pipeline's components
 #: stage (r11): near-dup pair graphs are a vanishing fraction of the
@@ -45,21 +46,16 @@ def _cc_collect_edges() -> int:
     return int(os.environ.get("TIMBALA_CC_COLLECT_EDGES", CC_COLLECT_EDGES))
 
 
+@pin_scope()
 def near_dup_pipeline(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
     n: int = 7,
-    persist_shingles: bool | None = None,
 ) -> DataFrame:
     """Returns one row per input row: (``id_col``, canonical_id,
-    is_canonical ∈ {0,1}).
-
-    ``persist_shingles`` is accepted for API compatibility and ignored
-    (r8: ``ngram_jaccard_pairs`` runs a single pinned-text design,
-    PERF §20c take 7)."""
-    del persist_shingles
+    is_canonical ∈ {0,1})."""
     dig = docs.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
     ).withColumn("_digest", F.sha2(F.col("_text"), 256))
@@ -68,18 +64,15 @@ def near_dup_pipeline(
     # (the stop-shingle report, component-label seeding, the canonical
     # join) — unpinned, each would re-run the sha256 pass and the
     # digest shuffle over the whole corpus (PERF §20c take 3).
-    # Ids+digest are ~50 B/doc. This is the composition's OPENING pin:
-    # it releases the previous query's tracked frames.
-    from .util import tracked_persist
-
-    ids = tracked_persist(ids, release_previous=True)
+    # Ids+digest are ~50 B/doc.
+    ids = tracked_persist(ids)
     reps = ids.groupBy("_digest").agg(F.min("_id").alias("_rep"))
     # reps feeds FOUR separate consumers (the doc→rep mapping, the
     # survivor text join, the component seed, components' final semi
     # join), several of them in their own actions — pin it (~40 B/doc)
     # so each reads a cache scan instead of re-running the digest
     # aggregation exchange (PERF §20c take 8)
-    reps = tracked_persist(reps, release_previous=False)
+    reps = tracked_persist(reps)
     # doc → exact representative (digest join: 32-byte key, never text)
     mapping = ids.join(reps, "_digest").select("_id", "_rep")
     survivors = (
@@ -93,7 +86,6 @@ def near_dup_pipeline(
         text_col=text_col,
         threshold=threshold,
         n=n,
-        _release_previous=False,  # keep the ids/reps pins above alive
         eager=True,  # pair list is consumed by 2 union branches +
         # the components loop: checkpoint it once, drop the
         # text/posting pins (PERF §20c take 8)
@@ -125,6 +117,7 @@ def near_dup_pipeline(
     )
 
 
+@pin_scope()
 def curate_corpus(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
@@ -140,7 +133,6 @@ def curate_corpus(
     shard_budget: int | None = None,
     seed: int = 0,
     keep_original_text: bool = False,
-    persist_shingles: bool | None = None,
     checkpoint_components: bool | None = None,
     scratch_dir: str | None = None,
 ) -> DataFrame:
@@ -169,10 +161,6 @@ def curate_corpus(
     quality gate so metrics see what training sees; sampling/caps
     before packing so shards are final.  Every stage is an existing
     audited operator; this function only fixes the composition.
-    ``persist_shingles`` is accepted for API compatibility and ignored
-    (r8: the dedup stage runs a single pinned-text design that the
-    per-action audit measured ~5× cheaper than either r7 mode on wall
-    AND scratch at 5M docs, PERF §20c take 7).
 
     ``checkpoint_components`` (default: auto — on exactly when the
     one-pass size estimate says the corpus is big)
@@ -207,7 +195,6 @@ def curate_corpus(
     from .sample import cap_per_group, pack_greedy, stratified_sample
     from .text import flag_contaminated, scrub_pii, tokens_expr
 
-    del persist_shingles  # r8: accepted for API compat, ignored
     cur = near_dup_pipeline(
         docs,
         id_col=id_col,
@@ -228,9 +215,7 @@ def curate_corpus(
         # past the checkpoint nothing recomputes the dedup lineage —
         # drop its pins (digest map, reps, text, postings: ~15 GB of
         # cache at 20M docs) before the scrub/layout stages run
-        from .util import release_tracked
-
-        release_tracked()
+        release_scope()
     out = (
         docs.join(cur, id_col)
         .filter(F.col("is_canonical") == 1)
@@ -288,12 +273,9 @@ def curate_corpus(
         # the whole dedup/scrub lineage (AQE re-plans per action, so
         # shuffle-stage reuse cannot be relied on — measured 3× the
         # end-to-end wall at 5M docs without this persist, PERF §20).
-        # release_previous=False: the dedup stages' own tracked
-        # persists may still back this lineage. (With ``scratch_dir``
-        # the lineage is just the parquet scan — the persist then only
-        # buys the quantile/subtotal passes a local read.)
-        from .util import tracked_persist
-
-        out = tracked_persist(out, release_previous=False)
+        # (With ``scratch_dir`` the lineage is just the parquet scan —
+        # the persist then only buys the quantile/subtotal passes a
+        # local read.)
+        out = tracked_persist(out)
         out = pack_greedy(out, shard_budget, "n_tokens", id_col)
     return out

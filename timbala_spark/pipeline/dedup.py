@@ -30,8 +30,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 from .text import sliding_join_expr, tokens_expr
 from .util import (
     ensure_parallelism,
-    estimated_input_bytes,
     hash64_expr,
+    pin_scope,
+    release_scope,
     small_corpus,
     tracked_persist,
 )
@@ -68,7 +69,7 @@ def word_shingles_expr(text: Column, n: int, small: bool = False) -> Column:
     400-token docs, growing with length; invisible at the 54-token
     bench corpus, which is why it survived to r11).  ``small`` picks
     the short-document arm (callers thread the shared metadata-only
-    ``_small_corpus`` gate; plan shape only — values bit-identical,
+    ``small_corpus`` gate; plan shape only — values bit-identical,
     parity-tested).  The legacy NULL-text output (a single-NULL
     array — ``sequence(1, greatest(NULL, 1))`` produced one NULL
     shingle) is reproduced by the explicit guard.
@@ -89,38 +90,12 @@ def word_shingles_expr(text: Column, n: int, small: bool = False) -> Column:
 #: Estimated shingle-array bytes above which a corpus counts as "big"
 #: (override via TIMBALA_SHINGLE_PERSIST_BUDGET_BYTES).  r7 used this
 #: to switch ``ngram_jaccard_pairs`` into an array-recompute mode; the
-#: r8 per-action shuffle audit (tools/e2e_shuffle_audit.py, PERF §20c
-#: take 7) measured that mode 5× WORSE on both wall and scratch, and
-#: the operator now always runs the single pinned-text design.  The
+#: r8 per-action shuffle audit (PERF §20c take 7) measured that mode 5×
+#: WORSE on both wall and scratch, and the operator now always runs the
+#: single pinned-text design.  The
 #: estimate survives as ``curate_corpus``'s big-corpus switch (the
 #: lineage-checkpoint default).
 SHINGLE_PERSIST_BUDGET_BYTES = 16 << 30
-
-#: On-disk input bytes (leaf-scan files, compressed) below which
-#: ``ngram_jaccard_pairs`` skips its pure-action machinery — the
-#: stop-shingle COUNT job (the fired-cap report), a fixed job cost
-#: that dominated the sub-10k-doc bench corpus (r8 regression:
-#: 1.76 → 2.71 s, VERDICT r8 "what's wrong" #3).  The eager
-#: intermediate candidate checkpoint is NOT gated: it is kept on both
-#: paths because the components loop re-consumes the pair list per
-#: iteration (r9 A/B: the lazy-pin alternative measured ~0.4 s slower
-#: even at the 5k-doc bench corpus).
-#: 64 MB of parquet is ~150-200 MB of raw text
-#: (~100-200k typical documents).  Override via
-#: ``TIMBALA_NGRAM_SMALL_CORPUS_BYTES``; 0 disables the fast path.
-SMALL_CORPUS_INPUT_BYTES = 64 << 20
-
-
-# r12: the gate and its size estimate moved to util (similarity.py
-# needs them too and dedup already imports similarity — the other
-# direction would be circular).  Env knob renamed to the generic
-# TIMBALA_SMALL_CORPUS_BYTES (the old TIMBALA_NGRAM_SMALL_CORPUS_BYTES
-# is honored as a fallback — it had grown to control non-ngram paths,
-# r11 ADVICE).  These aliases keep every existing caller and test
-# working unchanged.
-_estimated_input_bytes = estimated_input_bytes
-_small_corpus = small_corpus
-
 
 def _resolve_persist_shingles(
     df: DataFrame, text_col: str, n: int
@@ -165,6 +140,7 @@ def _resolve_persist_shingles(
 _DEFAULT_MAX_POSTINGS = 256
 
 
+@pin_scope()
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -172,8 +148,6 @@ def ngram_jaccard_pairs(
     n: int = 5,
     threshold: float = 0.2,
     max_postings: int | None = _DEFAULT_MAX_POSTINGS,
-    persist_shingles: bool | None = None,
-    _release_previous: bool = True,
     eager: bool = False,
 ) -> DataFrame:
     """Exact Jaccard similarity over word n-gram sets for every pair of
@@ -214,9 +188,7 @@ def ngram_jaccard_pairs(
     per-action audit measured at 5× the wall AND 5× the shuffle
     scratch of the pinned-text design at 5M docs (23.3 GB vs 4.3 GB;
     the mode auto-selected at 20M was the one that ENOSPCed the
-    composition).  ``persist_shingles`` is accepted for API
-    compatibility and ignored — results and plan are identical for
-    every value.
+    composition).
 
     ``eager=True`` materializes the (small) pair list via an eager
     ``localCheckpoint`` and unpersists the operator's internal pins
@@ -228,7 +200,7 @@ def ngram_jaccard_pairs(
     the text/posting pins would otherwise stay resident long after
     the pair list is final.
 
-    Small corpora (≤ :data:`SMALL_CORPUS_INPUT_BYTES` of leaf-scan
+    Small corpora (≤ ``util.SMALL_CORPUS_INPUT_BYTES`` of leaf-scan
     file bytes, gauged metadata-only) skip the one PURE-ACTION job —
     the stop-shingle COUNT (the fired-cap report) — whose fixed cost
     dominated sub-10k-doc calls (r9; the r8 bench regression).  The
@@ -240,8 +212,6 @@ def ngram_jaccard_pairs(
     identical on both paths — only the count action and its cap log
     differ.
     """
-    del persist_shingles  # r8: single design; kept for API compat
-
     # Small-corpus fast path (r9): skip the one PURE-ACTION job — the
     # stop-shingle count (the fired-cap report) — whose fixed job cost
     # dominated the sub-10k-doc bench corpus (the r8 regression,
@@ -252,18 +222,11 @@ def ngram_jaccard_pairs(
     # metadata-only (leaf file sizes — no job) and fails CLOSED:
     # unknown size ⇒ big ⇒ full machinery.  Results are identical on
     # both paths — only actions and the cap log differ.
-    small = _small_corpus(df)
-    _local_pins: list[DataFrame] = []
-
-    def _pin(frame: DataFrame, release_previous: bool) -> DataFrame:
-        out = tracked_persist(frame, release_previous=release_previous)
-        _local_pins.append(out)
-        return out
-
+    small = small_corpus(df)
     src = ensure_parallelism(df).select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
     )
-    src = _pin(src, _release_previous)
+    src = tracked_persist(src)
     sh = src.select(
         "_id", word_shingles_expr(F.col("_text"), n, small=small).alias("_sh")
     ).withColumn("_n", F.size("_sh"))
@@ -287,7 +250,7 @@ def ngram_jaccard_pairs(
         # own action, and the candidate join consumes the table again —
         # without the pin each re-shingles the whole corpus (PERF §20c
         # take 7)
-        posting = _pin(posting, False)
+        posting = tracked_persist(posting)
         hot = (
             posting.groupBy("_s")
             .count()
@@ -301,7 +264,7 @@ def ngram_jaccard_pairs(
         # posting-wide agg ran twice per invocation).  `hot` is tiny
         # (over-cap shingles only), the agg over the pinned postings is
         # the expensive part.  Values unchanged — plan-shape only.
-        hot = _pin(hot, False)
+        hot = tracked_persist(hot)
         # fired-cap report, same contract as the LSH bucket cap:
         # a few boilerplate shingles are the design; most shingles
         # over-cap means the corpus is duplicate-dominated and the
@@ -364,7 +327,7 @@ def ngram_jaccard_pairs(
             # 5k-doc bench corpus (r9 A/B on dedup_pipeline)
             cand = cand.localCheckpoint(eager=True)
         else:
-            cand = _pin(cand, False)
+            cand = tracked_persist(cand)
         # Semi-join reduction BEFORE the verify joins (r8, PERF §20c):
         # only documents that appear in some candidate pair need their
         # shingle ARRAYS at verify time — on a mostly-unique corpus
@@ -403,7 +366,7 @@ def ngram_jaccard_pairs(
         # invocation's heaviest duplicate jobs).  Candidate-reduced, so
         # the pin is small by design at every scale — the same pin the
         # incremental probe's _verify_pairs has always taken.
-        sh_c = _pin(sh_c, False)
+        sh_c = tracked_persist(sh_c)
         out = (
             cand.join(
                 sh_c.select(
@@ -452,14 +415,9 @@ def ngram_jaccard_pairs(
     if eager:
         # one execution of the candidate machinery, then the pair list
         # (ids + a double — tiny) is storage-backed and the text/
-        # posting pins are dead weight; entries left in the tracked
-        # registry are harmless (double-unpersist is a no-op)
+        # posting pins are dead weight
         result = result.localCheckpoint(eager=True)
-        for p in _local_pins:
-            try:
-                p.unpersist(blocking=False)
-            except Exception:
-                pass
+        release_scope()
     return result
 
 
@@ -615,6 +573,7 @@ def minhash_params_for(threshold: float, num_hashes: int = 64) -> int:
     return best
 
 
+@pin_scope()
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -652,7 +611,7 @@ def minhash_lsh_pairs(
     # worktree A/B) — the same fixed-cost-vs-throughput split every
     # other gated path in this module records.  Gate is metadata-only
     # and fails CLOSED to the big-corpus (codegen) arm.
-    small = _small_corpus(df)
+    small = small_corpus(df)
     base = ensure_parallelism(df).select(
         F.col(id_col).alias("_id"),
         word_shingles_expr(F.col(text_col), n, small=small).alias("_sh"),
@@ -690,10 +649,7 @@ def minhash_lsh_pairs(
         # big arm: the codegen signature aggregation, pinned — the band
         # self-join reads it on both sides (ids + 64 longs ≈ 520 B/row,
         # far smaller than the small arm's _hs/_sig pin).
-        sigs = tracked_persist(
-            _minhash_sigs_by_id(base, num_hashes, hash_algo),
-            release_previous=False,
-        )
+        sigs = tracked_persist(_minhash_sigs_by_id(base, num_hashes, hash_algo))
         banded = sigs.select(
             "_id",
             F.explode(
@@ -755,6 +711,7 @@ _LSH_VS_BLAS_PAIR_COST = 64
 _DEFAULT_MAX_BUCKET_ROWS = 2048
 
 
+@pin_scope()
 def embedding_near_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -996,7 +953,7 @@ def embedding_near_dup_pairs(
         # through it multiplies the shuffle by the embedding width ×
         # duplicate bucket hits (OOMed at sf0.1); vectors are
         # re-attached per distinct pair afterwards.
-        banded = tracked_persist(banded, release_previous=False)
+        banded = tracked_persist(banded)
         if max_bucket_rows is not None:
             # stop-bucket exclusion, mirroring the n-gram stop-shingle
             # cap: an over-cap (table, bucket) cell generates no
@@ -1011,10 +968,10 @@ def embedding_near_dup_pairs(
             # execute once per side (r12: the plan showed the
             # HashAggregate+Exchange subtree twice — the same
             # duplicated-subtree shape as the n-gram stop-shingle pin
-            # at `_pin(hot, False)` above).  `cells` is one row per
+            # in ngram_jaccard_pairs).  `cells` is one row per
             # (table, bucket) cell — tiny next to `banded` — so pin it
             # on both arms; the pin is lazy and adds no action job.
-            cells = tracked_persist(cells, release_previous=False)
+            cells = tracked_persist(cells)
             hot = cells.filter(F.col("count") > max_bucket_rows).select(
                 "_tbl", "_bkt"
             )
@@ -1023,7 +980,7 @@ def embedding_near_dup_pairs(
             # n-gram path applies to its stop-shingle report; r11).
             # The anti-join below is UNCONDITIONAL either way, so the
             # candidate set is identical on both paths.
-            if not _small_corpus(df):
+            if not small_corpus(df):
                 n_cells = cells.count()
                 n_hot = hot.count()
                 if n_hot:
@@ -1390,6 +1347,7 @@ def with_simhash(
     )
 
 
+@pin_scope()
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

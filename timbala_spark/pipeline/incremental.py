@@ -94,13 +94,12 @@ from .dedup import (
     _minhash_band_structs,
     _minhash_band_structs_fold,
     _minhash_sigs_by_id,
-    _small_corpus,
     hash64_expr,
     minhash_params_for,
     minhash_signature_expr,
     word_shingles_expr,
 )
-from .util import ensure_parallelism, tracked_persist
+from .util import ensure_parallelism, pin_scope, small_corpus, tracked_persist
 
 _META = "_index_meta.json"
 
@@ -328,7 +327,7 @@ def _ngram_postings(
     Identical hashing to ``ngram_jaccard_pairs``' posting table —
     explode BEFORE hashing so the hash runs in codegen, not inside an
     interpreted array transform (the §9 HOF trap); same r11
-    ``_small_corpus``-gated sliding-join arm for the shingle windows
+    ``small_corpus``-gated sliding-join arm for the shingle windows
     (plan shape only — values identical)."""
     return (
         ensure_parallelism(df)
@@ -336,7 +335,7 @@ def _ngram_postings(
             F.col(id_col).alias("_id"),
             F.explode(
                 word_shingles_expr(
-                    F.col(text_col), n, small=_small_corpus(df)
+                    F.col(text_col), n, small=small_corpus(df)
                 )
             ).alias("_str"),
         )
@@ -362,7 +361,7 @@ def _minhash_bands(
     (parity-tested both algos), 6.7× on the signature stage, one extra
     ids-keyed exchange of 8 + 8·num_hashes bytes/doc that the map-side
     partial MIN collapses to one row per id)."""
-    small = _small_corpus(df)
+    small = small_corpus(df)
     base = (
         ensure_parallelism(df)
         .select(
@@ -440,7 +439,7 @@ def _verify_pairs(
             )
             .otherwise(
                 word_shingles_expr(
-                    F.col("_text"), n, small=_small_corpus(texts)
+                    F.col("_text"), n, small=small_corpus(texts)
                 )
             )
             .alias("_sh"),
@@ -449,7 +448,7 @@ def _verify_pairs(
     )
     # pinned: sh feeds both sides of the pair join; its lineage holds
     # the corpus semi-join, which must not run twice
-    sh = tracked_persist(sh, release_previous=False)
+    sh = tracked_persist(sh)
     return (
         cand.join(
             sh.select(
@@ -578,6 +577,7 @@ def ngram_index_append(
     )
 
 
+@pin_scope()
 def ngram_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -615,8 +615,7 @@ def ngram_index_probe(
     )
 
     bpost = _ngram_postings(batch, id_col, text_col, n, algo)
-    # pinned: feeds the degree count, the cross join and the
-    # within-batch join (opens the query's tracked-pin scope)
+    # pinned: feeds the degree count, the cross join and the within-batch join
     bpost = tracked_persist(bpost)
     bkeys = bpost.select(F.col("_s").alias("s")).distinct()
     if batch_broadcast:
@@ -648,7 +647,7 @@ def ngram_index_probe(
     # unpinned, each consumer re-executes the index scan (the fan-out
     # re-execution lesson of PERF §20c take 8, which this module
     # exists to apply)
-    matched = tracked_persist(matched, release_previous=False)
+    matched = tracked_persist(matched)
 
     if max_postings is not None:
         # global degree = index degree + batch degree, per shingle —
@@ -669,7 +668,7 @@ def ngram_index_probe(
         # unpinned, the union+aggregation executes once per broadcast
         # build (r12, same duplicated-subtree shape as the batch
         # operator's stop-shingle pin).  Over-cap shingles only — tiny.
-        hot = tracked_persist(hot, release_previous=False)
+        hot = tracked_persist(hot)
         matched = matched.join(F.broadcast(hot), "s", "left_anti")
         bpost_c = bpost.join(
             F.broadcast(hot).withColumnRenamed("s", "_s"), "_s", "left_anti"
@@ -810,6 +809,7 @@ def minhash_index_append(
     )
 
 
+@pin_scope()
 def minhash_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -858,7 +858,7 @@ def minhash_index_probe(
         .join(F.broadcast(b_ids), "_oid", "left_anti")
         .dropDuplicates(["_oid", "band", "bucket"])  # see ngram probe
     )
-    matched = tracked_persist(matched, release_previous=False)
+    matched = tracked_persist(matched)
     cross = (
         matched.join(
             bb.select(
@@ -1118,7 +1118,7 @@ def _verify_cosine(
     )
     # pinned: v feeds both sides of the pair join (same fan-out rule
     # as _verify_pairs)
-    v = tracked_persist(v, release_previous=False)
+    v = tracked_persist(v)
     return (
         cand.join(
             v.select(
@@ -1239,6 +1239,7 @@ def embedding_index_append(
     )
 
 
+@pin_scope()
 def embedding_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -1299,7 +1300,7 @@ def embedding_index_probe(
         .join(F.broadcast(b_ids), "_oid", "left_anti")
         .dropDuplicates(["_oid", "tbl", "bkt"])  # see ngram probe
     )
-    matched = tracked_persist(matched, release_previous=False)
+    matched = tracked_persist(matched)
 
     if max_bucket_rows is not None and max_bucket_rows > 0:
         # global cell size = index rows + batch rows per (tbl, bkt) —
@@ -1323,7 +1324,7 @@ def embedding_index_probe(
         # unpinned, the union+aggregation executes once per broadcast
         # build (r12, same duplicated-subtree shape as the batch
         # operator's cell pin).  Over-cap cells only — tiny.
-        hot = tracked_persist(hot, release_previous=False)
+        hot = tracked_persist(hot)
         matched = matched.join(F.broadcast(hot), ["tbl", "bkt"], "left_anti")
         bb_c = bb.join(
             F.broadcast(hot)

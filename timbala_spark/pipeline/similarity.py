@@ -20,7 +20,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .util import ensure_parallelism, small_corpus, tracked_persist
+from .util import ensure_parallelism, pin_scope, small_corpus, tracked_persist
 
 
 def as_double_array(col: Column) -> Column:
@@ -356,6 +356,7 @@ def lsh_cosine_topk(
     )
 
 
+@pin_scope()
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,

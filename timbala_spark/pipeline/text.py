@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .util import ensure_parallelism, hash64_expr, small_corpus
+
 #: Tiny per-language stopword seeds for the n-gram/stopword heuristic.
 #: Deliberately short and frozen: the DuckDB oracle mirrors them.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -91,7 +93,7 @@ def sliding_join_expr(toks: Column, n: int, small: bool = False) -> Column:
     ``tokens_expr`` produces; zip_with's null padding marks the
     <n-token tail positions NULL and the final prefix slice keeps
     positions ``1..max(cnt, 1)`` — the old sequence bounds.  Callers
-    gate the arm on the shared metadata-only ``_small_corpus`` cut
+    gate the arm on the shared metadata-only ``small_corpus`` cut
     (plan-shape only, never results) and must guard NULL/short inputs
     BEFORE this expression (the arms disagree on bare-NULL ``toks``:
     join-form yields ``[NULL]``, chain-form ``NULL``)."""
@@ -241,8 +243,6 @@ def with_fingerprint(
     a robust near-duplicate signature computed entirely JVM-side.
     ``hash_algo="md5"`` makes the whole pipeline DuckDB-replayable
     (see ``util.hash64_expr``)."""
-    from .util import ensure_parallelism, hash64_expr, small_corpus
-
     small = small_corpus(df)
     df = ensure_parallelism(df)
     text = F.col(text_col)
@@ -372,9 +372,7 @@ def flag_contaminated(
     Returns ``docs`` plus ``n_contam_ngrams`` (distinct shared grams)
     and ``contaminated``.
     """
-    from .dedup import _small_corpus  # lazy: dedup imports this module
-
-    small = _small_corpus(docs)
+    small = small_corpus(docs)
     g = ngrams_expr(F.col(text_col), n, small=small)
     if hash_grams:
         g = F.transform(g, lambda s: F.xxhash64(s))

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import contextlib
 import re
+import threading
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -55,43 +57,59 @@ def hash64_expr(c: Column, algo: str = "xxhash64") -> Column:
         return F.shiftleft(hi, 32).bitwiseOR(lo)
     raise ValueError(f"unknown hash64 algo {algo!r}")
 
-#: DataFrames persisted by pipeline operators, kept so a long session
-#: running many pipeline queries does not leak block-manager memory.
-_TRACKED: list[DataFrame] = []
+
+#: Each thread's pins (its open or last outermost scope's), keyed by
+#: thread so that a scope can also free those of exited threads.
+_PINS: dict[threading.Thread, list[DataFrame]] = {}
+_PINS_LOCK = threading.Lock()
+_OPEN = threading.local()  # .marks: where each open scope's pins begin
 
 
-def tracked_persist(df: DataFrame, release_previous: bool = True) -> DataFrame:
-    """``persist()`` with lifecycle tracking.
-
-    Sketch/signature stages feed several plan branches and must be
-    persisted (PERF.md §7), but each contract query is consumed once —
-    holding every query's blocks for the whole session piles up
-    executor memory and GC pressure (measured: a warmed 1 s query
-    degrading to 11 s after a dozen persist-leaking queries).
-    ``tracked_persist`` releases the *previous* operators' blocks
-    before pinning the new stage, bounding resident persisted data to
-    the live query. Results already returned to callers stay correct —
-    re-consuming one simply recomputes its lineage.
-
-    ``release_previous=False`` chains a second persist within the SAME
-    query (e.g. the normalized-vector frame AND the LSH signature frame
-    both feed multiple branches); the pair is released together when the
-    next query's first tracked_persist runs.
-    """
-    if release_previous:
-        release_tracked()
-    out = df.persist()
-    _TRACKED.append(out)
-    return out
-
-
-def release_tracked() -> None:
-    """Unpersist every tracked stage (non-blocking)."""
-    while _TRACKED:
+def _release(pins: list[DataFrame], start: int = 0) -> None:
+    for df in pins[start:]:
         try:
-            _TRACKED.pop().unpersist(blocking=False)
+            df.unpersist(blocking=False)
         except Exception:
             pass  # session already stopped
+    del pins[start:]
+
+
+@contextlib.contextmanager
+def pin_scope():
+    """The lifetime of :func:`tracked_persist` pins, as ``with
+    pin_scope():`` or the ``@pin_scope()`` every pinning operator wears.
+    A scope opened inside another on the same thread joins it.  Opening
+    an OUTERMOST scope releases the pins of this thread's previous one
+    and of exited threads: a result keeps its pins until the same
+    thread's next operator call."""
+    marks = _OPEN.__dict__.setdefault("marks", [])
+    me = threading.current_thread()
+    if not marks:
+        with _PINS_LOCK:
+            stale = [_PINS.pop(t) for t in list(_PINS) if t is me or not t.is_alive()]
+        for pins in stale:
+            _release(pins)
+    marks.append(len(_PINS.get(me, ())))
+    try:
+        yield
+    finally:
+        marks.pop()
+
+
+def release_scope() -> None:
+    """Unpersist the pins taken since the innermost open scope began,
+    for an operator whose result no longer reads them."""
+    _release(_PINS.get(threading.current_thread(), []), _OPEN.marks[-1])
+
+
+def tracked_persist(df: DataFrame) -> DataFrame:
+    """``persist()`` a stage that feeds several plan branches (PERF.md
+    §7) for the life of the current :func:`pin_scope` (else of the
+    thread's last one) — leaked pins once slowed a 1 s query to 11 s."""
+    out = df.persist()
+    with _PINS_LOCK:
+        _PINS.setdefault(threading.current_thread(), []).append(out)
+    return out
 
 
 #: Shared small-corpus gate threshold (see :func:`small_corpus`).
@@ -135,25 +153,15 @@ def small_corpus(df: DataFrame) -> bool:
     """The small-corpus gate shared by the pipeline operators (n-gram
     stop-shingles, embedding stop-buckets, MinHash signature arm,
     pack_greedy fast path, similarity kernels): ``True`` when the
-    frame's leaf-scan bytes fit under :data:`SMALL_CORPUS_INPUT_BYTES`.
-    Env override ``TIMBALA_SMALL_CORPUS_BYTES`` (r12; the historical
-    ``TIMBALA_NGRAM_SMALL_CORPUS_BYTES`` name is honored as a
-    fallback); 0 disables, i.e. never small.  Metadata-only (no job),
-    fails CLOSED: unknown size ⇒ big ⇒ full machinery.  Gates
+    frame's leaf-scan bytes fit under :data:`SMALL_CORPUS_INPUT_BYTES`,
+    read at call time; a cut ``<= 0`` means never small.  Metadata-only
+    (no job), fails CLOSED: unknown size ⇒ big ⇒ full machinery.  Gates
     PURE-ACTION work (fired-cap REPORT counts) and result-identical
     PLAN-SHAPE choices — never anything that changes results."""
-    import os
-
-    raw = os.environ.get("TIMBALA_SMALL_CORPUS_BYTES")
-    if raw is None:
-        raw = os.environ.get(
-            "TIMBALA_NGRAM_SMALL_CORPUS_BYTES", SMALL_CORPUS_INPUT_BYTES
-        )
-    cut = int(raw)
-    if cut <= 0:
+    if SMALL_CORPUS_INPUT_BYTES <= 0:
         return False
     est = estimated_input_bytes(df)
-    return est is not None and est <= cut
+    return est is not None and est <= SMALL_CORPUS_INPUT_BYTES
 
 
 def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:

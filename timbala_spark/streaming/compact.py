@@ -221,10 +221,9 @@ def compact_store(
     generation's read path (``ingest.read_samples_table``) registers
     the tables in the session catalog and the dict join runs with ZERO
     exchanges below the join — the biggest measured read lever at the
-    40M-series bar (1.75× in the prototype A/B,
-    ``tools/bucketed_join_ab.py``).  Dirty reads (straggler carry,
-    post-commit appends: plain-named files mixed into the location)
-    fall back to the ordinary path scan, which reads bucketed files
+    40M-series bar (1.75× in the prototype A/B).  Dirty reads
+    (straggler carry, post-commit appends: plain-named files mixed into
+    the location) fall back to the ordinary path scan, which reads bucketed files
     like any parquet.  Incremental compaction composes only when the
     SOURCE generation is already bucketed with the same count (bucket
     assignment is deterministic in series_id, so linked untouched-day

@@ -1,7 +1,6 @@
 """Store-integrated bucketed-layout A/B (r9; PERF §12).
 
-The r8 prototype (`tools/bucketed_join_ab.py`) measured the bucketed
-dict join on raw tables; this measures it through the REAL store
+The r8 prototype measured the bucketed dict join on raw tables; this measures it through the REAL store
 surface: one synthetic series-dominated store, compacted plain, read
 and pinned; recompacted with ``bucket_by_series``; both reads then
 timed interleaved in the same session (PERF §10 discipline — the

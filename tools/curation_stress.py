@@ -172,15 +172,11 @@ def main() -> None:
 
         scratch = tempfile.mkdtemp(prefix="curation_stage_")
 
-        def e2e(persist_shingles=None):
-            # persist_shingles is ignored since r8 (single pinned-text
-            # design, PERF §20c take 7); COMPARE_MODES now doubles as a
-            # run-to-run determinism check of the full composition.
+        def e2e():
             # scratch_dir: the storage-backed stage boundary a real
             # pipeline has anyway (curated corpus lands before layout)
             out = curate_corpus(
                 corpus,
-                persist_shingles=persist_shingles,
                 sample_fraction=0.5,
                 cap_group_col="source",
                 cap_max_rows=2000,
@@ -205,29 +201,24 @@ def main() -> None:
                 ),
             ).collect()[0]
 
-        t("curate_corpus end-to-end (auto shingle mode)", e2e, reps=1)
+        t("curate_corpus end-to-end", e2e, reps=1)
 
         if os.environ.get("STRESS_COMPARE_MODES") == "1":
-            # byte-identity check: persist vs recompute must agree on
-            # rows, max shard, and the full-output value hash
-            spark.catalog.clearCache()
-            gc.collect()
-            df = df.persist()
-            df.count()
-            r_persist = None
-
-            def run_mode(ps):
+            # run-to-run determinism: two cold-cache runs of the full
+            # composition must agree on rows, max shard, and the
+            # full-output value hash
+            def cold_run():
                 spark.catalog.clearCache()
                 gc.collect()
                 df.persist().count()
-                return e2e(persist_shingles=ps)
+                return e2e()
 
-            r_persist = run_mode(True)
-            r_recompute = run_mode(False)
-            same = tuple(r_persist) == tuple(r_recompute)
+            first = cold_run()
+            second = cold_run()
+            same = tuple(first) == tuple(second)
             print(
-                f"mode-identity: persist={tuple(r_persist)} "
-                f"recompute={tuple(r_recompute)} identical={same}",
+                f"run-identity: first={tuple(first)} "
+                f"second={tuple(second)} identical={same}",
                 flush=True,
             )
             if not same:

@@ -8,8 +8,8 @@ small-corpus gate takes its scale arm.
 
 Where both arms live in HEAD behind the shared gate
 (minhash_lsh_pairs signatures, cosine_topk kernels) the arms are A/B'd
-END-TO-END through the public operator by flipping
-TIMBALA_SMALL_CORPUS_BYTES between calls (huge -> small/fold arm,
+END-TO-END through the public operator by setting
+util.SMALL_CORPUS_INPUT_BYTES between calls (huge -> small/fold arm,
 0 -> scale arm), interleaved in one session so box weather hits both.
 The ungated rewrites (with_fingerprint, sliding_join_expr) are
 measured end-to-end on HEAD at scale (their predecessors live in the
@@ -33,7 +33,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-GATE = "TIMBALA_SMALL_CORPUS_BYTES"
 
 
 def main() -> None:
@@ -127,16 +126,20 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return time.monotonic() - t0
 
-    def ab(label: str, mk, env_a: str, env_b: str, la: str, lb: str):
+    from timbala_spark.pipeline import util
+
+    default_cut = util.SMALL_CORPUS_INPUT_BYTES
+
+    def ab(label: str, mk, cut_a: int, cut_b: int, la: str, lb: str):
         ta, tb = [], []
         for _ in range(reps):
-            os.environ[GATE] = env_a
+            util.SMALL_CORPUS_INPUT_BYTES = cut_a
             spark.sparkContext.setJobDescription(f"{label}:{la}")
             ta.append(noop_time(mk()))
-            os.environ[GATE] = env_b
+            util.SMALL_CORPUS_INPUT_BYTES = cut_b
             spark.sparkContext.setJobDescription(f"{label}:{lb}")
             tb.append(noop_time(mk()))
-        os.environ.pop(GATE, None)
+        util.SMALL_CORPUS_INPUT_BYTES = default_cut
         spark.sparkContext.setJobDescription(None)
         ra, rb = min(ta), min(tb)
         print(f"| {label} | {la} {ra:.2f}s {[round(x,2) for x in ta]} | "
@@ -155,8 +158,8 @@ def main() -> None:
     print("| stage | A | B | A (fold) / B (scale arm) |")
     print("|---|---|---|---|")
 
-    huge = str(1 << 60)  # everything "small" -> fold arms
-    off = "0"            # never small -> scale arms
+    huge = 1 << 60  # everything "small" -> fold arms
+    off = 0         # never small -> scale arms
 
     # 1. minhash_lsh_pairs end-to-end: fold signatures+banding (small
     #    arm) vs codegen aggregation signatures (big arm)
